@@ -99,6 +99,12 @@ def unify_topology(raw: DataFrame, cfg: UnifyConfig) -> DataFrame:
     deserialize (S3) -> canonicalize with topic fallback (P2/P6) -> null
     filter (P3) -> stateful unify (T3-T9). Works on any DataFrame with
     (value, topic) columns — Kafka, file, or fixture."""
+    if cfg.event_time_mode and cfg.use_tws:
+        raise ValueError(
+            "event_time_mode and use_tws are exclusive: pick one unify "
+            "topology (the TWS event-time twin is "
+            "streaming.unify_tws.unify_stream_tws_event_time)"
+        )
     events = parse_order_events(raw, strict=cfg.strict_serde)
     # P1 parity (the reference's per-record peek, OrderProjectionTopology.
     # java:75-78): record/corrupt counts per micro-batch via observation
@@ -121,6 +127,11 @@ def unify_topology(raw: DataFrame, cfg: UnifyConfig) -> DataFrame:
 
 
 def apply_state_store_config(spark: SparkSession, cfg: UnifyConfig) -> None:
+    if cfg.use_tws and not cfg.rocksdb_state:
+        raise ValueError(
+            "use_tws requires rocksdb_state=True: transformWithStateInPandas "
+            "runs only on the RocksDB state store"
+        )
     if cfg.rocksdb_state:
         spark.conf.set(
             "spark.sql.streaming.stateStore.providerClass",

@@ -83,6 +83,41 @@ def _fastworker_conf(master: str = "local[*]") -> dict[str, str]:
     return conf
 
 
+# Spark's own FileSystem-API checkpoint manager; see _checkpoint_conf
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def _checkpoint_conf(master: str) -> dict[str, str]:
+    """Write streaming checkpoints through the FileSystem API on local
+    masters.
+
+    Every micro-batch writes several checkpoint files: the offset, commit
+    and file-source log entries plus one state delta per partition. Each
+    goes through the checkpoint manager's write-temp-then-rename. Spark's
+    default, the FileContext manager, checks the rename target with
+    ``RawLocalFileSystem.getFileLinkStatus``. Without the native Hadoop
+    library, that forks ``readlink`` several times per file. Local
+    ``file://`` has no atomic no-replace rename, so both managers do the
+    same check-then-rename; the FileSystem manager checks with ``exists``
+    and renames with ``File.renameTo``, and forks no ``readlink``.
+    Measured with perfbench ``stream_live`` on 4 cores: state commit
+    7.3 s -> 0.45 s and WAL commit 0.93 s -> 0.25 s per window.
+    ``ChecksumFileSystem`` still writes the ``.crc`` sidecars, so the
+    checkpoint layout is the same and either manager can resume the
+    other's checkpoint.
+
+    Cluster masters keep FileContext: on HDFS its no-replace rename is
+    atomic. A local master writing its checkpoint to HDFS can pin it back
+    through ``extra_conf``.
+    """
+    if not master.startswith("local"):
+        return {}
+    return {"spark.sql.streaming.checkpointFileManagerClass": _FS_CHECKPOINT_MANAGER}
+
+
 def get_spark(
     app_name: str = "kafka_stream_unify_order_messages_spark",
     master: str | None = None,
@@ -156,6 +191,8 @@ def get_spark(
         "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
         # memoized-invalidation python worker — see _fastworker_conf
         **_fastworker_conf(master),
+        # no forked readlink per checkpoint file — see _checkpoint_conf
+        **_checkpoint_conf(master),
     }
     if extra_conf:
         conf.update(extra_conf)

@@ -16,9 +16,13 @@ Parity targets (file:line into /root/reference):
   (OrderProjection.java:74-84)
 
 Scale notes: Spark fires ProcessingTimeTimeout per expired key at micro-batch
-boundaries — there is NO O(all keys) store sweep like the reference's 1 s
-punctuator (its known scale flaw, SURVEY.md §4.2). State per key is O(1)
-(three nullable event structs + a deadline). Run with
+boundaries, but finding those keys IS an O(all keys) store sweep, like the
+reference's 1 s punctuator (its known scale flaw, SURVEY.md §4.2): Spark
+4.1's ``FlatMapGroupsInPandasWithStateExec`` ``processTimedOutState`` runs
+``StateManager.getAllState(store).filter(timeoutTimestamp < threshold)``,
+which scans every partition's whole store on every micro-batch. The TWS
+twin (unify_tws.py) keeps its timers in an index and has no such sweep.
+State per key is O(1) (three nullable event structs + a deadline). Run with
 ``trigger(processingTime='1 second')`` to match the reference's punctuation
 cadence; at-least-once sink semantics match the reference default.
 
@@ -123,6 +127,25 @@ def _load_state(state: GroupState) -> tuple[int, dict[str, dict[str, Any]]]:
     return _decode_state(state.get)
 
 
+def _event_rows(pdfs: Iterator[pd.DataFrame]) -> Iterator[dict[str, Any]]:
+    """Every row of every frame as a column -> value dict. Zipping the
+    column lists takes about half the time per group of ``itertuples()``
+    + ``_asdict()``, and keeps column names that are not identifiers (or
+    start with ``_``) as they are."""
+    for pdf in pdfs:
+        cols = list(pdf.columns)
+        for values in zip(*(pdf[c].tolist() for c in cols)):
+            yield dict(zip(cols, values))
+
+
+def _emission_frame(emissions: list[tuple[str, int, str]]) -> pd.DataFrame:
+    """The (order_id, n_events, payload) output frame, built column-wise."""
+    return pd.DataFrame(
+        {c: list(v) for c, v in zip(UNIFY_OUTPUT_SCHEMA.names, zip(*emissions))},
+        copy=False,
+    )
+
+
 def make_unify_fn(buffer_ms: int = 5000, clock=None):
     """Build the per-group state function. ``clock`` (ms) is injectable for
     deterministic tests; defaults to wall clock like the reference
@@ -162,16 +185,14 @@ def make_unify_fn(buffer_ms: int = 5000, clock=None):
             else:
                 deadline, events = 0, {}
 
-            for pdf in pdfs:
-                for row in pdf.itertuples(index=False):
-                    ev = row._asdict()
-                    if ev.get("type") not in REQUIRED:
-                        continue  # unknown type: ignored (addEvent parity)
-                    if not events:
-                        deadline = now + buffer_ms  # new buffer, new deadline
-                    if ev["type"] in events:
-                        continue  # first-wins duplicate suppression
-                    events[ev["type"]] = ev
+            for ev in _event_rows(pdfs):
+                if ev.get("type") not in REQUIRED:
+                    continue  # unknown type: ignored (addEvent parity)
+                if not events:
+                    deadline = now + buffer_ms  # new buffer, new deadline
+                if ev["type"] in events:
+                    continue  # first-wins duplicate suppression
+                events[ev["type"]] = ev
 
             if events:
                 state.update(_state_tuple(deadline, events))
@@ -180,9 +201,7 @@ def make_unify_fn(buffer_ms: int = 5000, clock=None):
                 state.remove()
 
         if emissions:
-            yield pd.DataFrame(
-                emissions, columns=["order_id", "n_events", "payload"]
-            )
+            yield _emission_frame(emissions)
 
     return fn
 
@@ -227,18 +246,16 @@ def make_unify_fn_event_time(buffer_ms: int = 5000):
                 emit_if_complete(events)
                 deadline, events = 0, {}
 
-            for pdf in pdfs:
-                for row in pdf.itertuples(index=False):
-                    ev = row._asdict()
-                    ev_ms = ev.pop("event_ms", None)
-                    ev.pop("_event_time", None)
-                    if ev.get("type") not in REQUIRED:
-                        continue
-                    if not events:
-                        deadline = int(ev_ms) + buffer_ms
-                    if ev["type"] in events:
-                        continue
-                    events[ev["type"]] = ev
+            for ev in _event_rows(pdfs):
+                ev_ms = ev.pop("event_ms", None)
+                ev.pop("_event_time", None)
+                if ev.get("type") not in REQUIRED:
+                    continue
+                if not events:
+                    deadline = int(ev_ms) + buffer_ms
+                if ev["type"] in events:
+                    continue
+                events[ev["type"]] = ev
 
             if events:
                 state.update(_state_tuple(deadline, events))
@@ -247,9 +264,7 @@ def make_unify_fn_event_time(buffer_ms: int = 5000):
                 state.remove()
 
         if emissions:
-            yield pd.DataFrame(
-                emissions, columns=["order_id", "n_events", "payload"]
-            )
+            yield _emission_frame(emissions)
 
     return fn
 

@@ -78,6 +78,8 @@ from kafka_stream_unify_order_messages_spark.streaming.unify_stream import (
     REQUIRED,
     UNIFY_OUTPUT_SCHEMA,
     _decode_state,
+    _emission_frame,
+    _event_rows,
     _payload_json,
     _state_tuple,
 )
@@ -135,18 +137,16 @@ class OrderUnifyProcessor(StatefulProcessor):
         else:
             deadline, events = 0, {}
 
-        for pdf in rows:
-            for row in pdf.itertuples(index=False):
-                ev = row._asdict()
-                if ev.get("type") not in REQUIRED:
-                    continue  # unknown type: ignored (addEvent parity)
-                if not events:
-                    # new buffer: deadline = first event arrival + window
-                    deadline = now + self.buffer_ms
-                    self.handle.registerTimer(deadline)
-                if ev["type"] in events:
-                    continue  # first-wins duplicate suppression
-                events[ev["type"]] = ev
+        for ev in _event_rows(rows):
+            if ev.get("type") not in REQUIRED:
+                continue  # unknown type: ignored (addEvent parity)
+            if not events:
+                # new buffer: deadline = first event arrival + window
+                deadline = now + self.buffer_ms
+                self.handle.registerTimer(deadline)
+            if ev["type"] in events:
+                continue  # first-wins duplicate suppression
+            events[ev["type"]] = ev
 
         if events:
             self.state.update(_state_tuple(deadline, events))
@@ -154,9 +154,7 @@ class OrderUnifyProcessor(StatefulProcessor):
             self.state.clear()
 
         if emissions:
-            yield pd.DataFrame(
-                emissions, columns=["order_id", "n_events", "payload"]
-            )
+            yield _emission_frame(emissions)
 
     # -- timer expiry (the punctuator path) --------------------------------
 
@@ -178,9 +176,7 @@ class OrderUnifyProcessor(StatefulProcessor):
         emissions = self._emit_if_complete(order_id, events)
         self.state.clear()
         if emissions:
-            yield pd.DataFrame(
-                emissions, columns=["order_id", "n_events", "payload"]
-            )
+            yield _emission_frame(emissions)
 
 
 class OrderUnifyEventProcessor(OrderUnifyProcessor):
@@ -217,29 +213,27 @@ class OrderUnifyEventProcessor(OrderUnifyProcessor):
         else:
             deadline, events = 0, {}
 
-        for pdf in rows:
-            for row in pdf.itertuples(index=False):
-                ev = row._asdict()
-                ev_ms = ev.pop("event_ms", None)
-                ev.pop("_event_time", None)
-                if ev.get("type") not in REQUIRED:
-                    continue  # unknown type: ignored (addEvent parity)
-                if ev_ms is None:
-                    # ts_col failed to_timestamp parsing upstream: whether
-                    # a null-event-time row reaches the processor at all is
-                    # engine-version-dependent (the watermark filter
-                    # normally drops it) — skip rather than crash on
-                    # int(None) if one ever does
-                    continue
-                if not events:
-                    # new buffer: deadline = first event's EVENT time +
-                    # window; a timer at a past event-time (late first
-                    # event) fires on the next micro-batch
-                    deadline = int(ev_ms) + self.buffer_ms
-                    self.handle.registerTimer(deadline)
-                if ev["type"] in events:
-                    continue  # first-wins duplicate suppression
-                events[ev["type"]] = ev
+        for ev in _event_rows(rows):
+            ev_ms = ev.pop("event_ms", None)
+            ev.pop("_event_time", None)
+            if ev.get("type") not in REQUIRED:
+                continue  # unknown type: ignored (addEvent parity)
+            if ev_ms is None:
+                # ts_col failed to_timestamp parsing upstream: whether
+                # a null-event-time row reaches the processor at all is
+                # engine-version-dependent (the watermark filter
+                # normally drops it) — skip rather than crash on
+                # int(None) if one ever does
+                continue
+            if not events:
+                # new buffer: deadline = first event's EVENT time +
+                # window; a timer at a past event-time (late first
+                # event) fires on the next micro-batch
+                deadline = int(ev_ms) + self.buffer_ms
+                self.handle.registerTimer(deadline)
+            if ev["type"] in events:
+                continue  # first-wins duplicate suppression
+            events[ev["type"]] = ev
 
         if events:
             self.state.update(_state_tuple(deadline, events))
@@ -247,9 +241,7 @@ class OrderUnifyEventProcessor(OrderUnifyProcessor):
             self.state.clear()
 
         if emissions:
-            yield pd.DataFrame(
-                emissions, columns=["order_id", "n_events", "payload"]
-            )
+            yield _emission_frame(emissions)
 
 
 def unify_stream_tws_event_time(

@@ -10,6 +10,7 @@ import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from kafka_stream_unify_order_messages_spark.app import (
     UnifyConfig,
@@ -107,6 +108,25 @@ def test_config_env_overrides(monkeypatch):
     assert cfg.buffer_ms == 2500
     assert cfg.strict_serde is True
     assert cfg.output_topic == "order-projection"
+
+
+def test_event_time_mode_and_tws_are_exclusive(spark):
+    # event time used to win silently, leaving the TWS choice unused
+    raw = spark.createDataFrame([], "value string, topic string")
+    with pytest.raises(ValueError, match="event_time_mode and use_tws"):
+        unify_topology(raw, UnifyConfig(event_time_mode=True, use_tws=True))
+
+
+def test_tws_without_rocksdb_fails_before_touching_the_session(spark):
+    from kafka_stream_unify_order_messages_spark.app import (
+        apply_state_store_config,
+    )
+
+    key = "spark.sql.streaming.stateStore.providerClass"
+    prior = spark.conf.get(key, None)
+    with pytest.raises(ValueError, match="use_tws requires rocksdb_state"):
+        apply_state_store_config(spark, UnifyConfig(use_tws=True))
+    assert spark.conf.get(key, None) == prior
 
 
 def test_rocksdb_state_store_end_to_end(spark, tmp_path):

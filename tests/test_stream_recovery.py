@@ -4,12 +4,17 @@ recovery: state must survive a stop/restart with the same checkpoint."""
 from __future__ import annotations
 
 import json
+import os
 import time
 import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from kafka_stream_unify_order_messages_spark.session import (
+    _FS_CHECKPOINT_MANAGER,
+    _checkpoint_conf,
+)
 from kafka_stream_unify_order_messages_spark.streaming import (
     unify_stream,
     unify_stream_event_time,
@@ -213,3 +218,107 @@ def _recovery_body(spark, tmp_path):
         assert out["o9"]["events"][0]["order_details"] == {"s": 0}
     finally:
         q2.stop()
+
+
+# ---------------------------------------------------------------------------
+# Checkpoint file manager: local masters write checkpoints through the
+# FileSystem API (session._checkpoint_conf); cluster masters keep Spark's
+# FileContext default.
+# ---------------------------------------------------------------------------
+
+CKPT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+FILE_CONTEXT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager"
+)
+
+
+@pytest.mark.parametrize("master", ["local", "local[4]", "local[*]"])
+def test_local_masters_default_to_filesystem_checkpoint_manager(master):
+    assert _checkpoint_conf(master) == {CKPT_MANAGER_KEY: _FS_CHECKPOINT_MANAGER}
+
+
+@pytest.mark.parametrize(
+    "master", ["spark://host:7077", "yarn", "k8s://https://host:443"]
+)
+def test_cluster_masters_keep_filecontext_checkpoint_manager(master):
+    assert _checkpoint_conf(master) == {}
+
+
+def test_session_carries_checkpoint_manager_default(spark):
+    # the suite's session is built by get_spark on a local master
+    assert spark.conf.get(CKPT_MANAGER_KEY) == _FS_CHECKPOINT_MANAGER
+
+
+def _crc_gaps(ckpt: str) -> list[str]:
+    """Checkpoint files without their ChecksumFileSystem ``.crc`` sidecar."""
+    gaps = []
+    for d, _, files in os.walk(ckpt):
+        for f in files:
+            if not f.startswith(".") and f".{f}.crc" not in files:
+                gaps.append(os.path.join(d, f))
+    return gaps
+
+
+def test_restart_across_checkpoint_managers(spark, tmp_path):
+    # run 1 writes the checkpoint through Spark's FileContext manager,
+    # run 2 resumes it through the FileSystem default: o2's buffered state
+    # must survive, and o1 (emitted by run 1) must not be emitted again
+    src = tmp_path / "in"
+    src.mkdir()
+    ckpt = str(tmp_path / "ckpt")
+    out_dir = str(tmp_path / "out")
+
+    def start():
+        events = spark.readStream.schema(SCHEMA).parquet(str(src))
+        return (
+            unify_stream_event_time(events, buffer_ms=5000)
+            .writeStream.format("parquet")
+            .outputMode("append")
+            .option("path", out_dir)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+
+    def out_ids():
+        try:
+            return [r.order_id for r in spark.read.parquet(out_dir).collect()]
+        except Exception:
+            return []
+
+    prior = spark.conf.get(CKPT_MANAGER_KEY)
+    spark.conf.set(CKPT_MANAGER_KEY, FILE_CONTEXT_MANAGER)
+    try:
+        q1 = start()
+        try:
+            # o1 completes and closes (watermark 29 > deadline 5); o2's
+            # buffer (deadline 35) stays open across the restart
+            write_batch(src, [ev("o1", "created", 0), ev("o1", "placed", 1),
+                              ev("o1", "cancelled", 2), ev("o2", "created", 30),
+                              ev("o2", "placed", 31)], 0)
+            assert wait_for(spark, q1, None, lambda: "o1" in out_ids())
+            assert wait_for(
+                spark, q1, None,
+                lambda: (q1.lastProgress or {}).get("batchId", -1) >= 1,
+            )
+        finally:
+            q1.stop()
+    finally:
+        spark.conf.set(CKPT_MANAGER_KEY, prior)
+    assert out_ids() == ["o1"]
+
+    q2 = start()
+    try:
+        write_batch(src, [ev("o2", "cancelled", 32), ev("hb", "created", 59)], 1)
+        assert wait_for(spark, q2, None, lambda: "o2" in out_ids())
+        out = {r.order_id: json.loads(r.payload)
+               for r in spark.read.parquet(out_dir).collect()}
+    finally:
+        q2.stop()
+    assert sorted(out_ids()) == ["o1", "o2"]  # each emitted exactly once
+    # created/placed came from the state run 1 checkpointed
+    assert [e["order_details"] for e in out["o2"]["events"]] == [
+        {"s": 30}, {"s": 31}, {"s": 32},
+    ]
+    # both managers leave the same layout, .crc sidecars included
+    assert _crc_gaps(ckpt) == []
